@@ -7,12 +7,11 @@ Run from the repository root:
     python3 perfbench/run.py --smoke
     python3 perfbench/run.py --pin-seeds 0-49 --workload corridor_bundled [--tiny]
 
-The first call builds the program (the repository's own sbt build) and the
-measuring program perfbench.Main (perfbench/build.sbt); later calls reuse the
-build until a source file changes. perfbench.Main generates its inputs from the
-seed, measures for the given seconds, checks every output, and prints one JSON
-result as the last line of standard output. See perfbench/README.md for the workloads and
-metrics.
+Each call first brings the build of the program and of the measuring program
+perfbench.Main up to date (perfbench/Makefile; the first call compiles both).
+perfbench.Main generates its inputs from the seed, measures for the given
+seconds, checks every output, and prints one JSON result as the last line of
+standard output. See perfbench/README.md for the workloads and metrics.
 """
 import argparse
 import fcntl
@@ -20,6 +19,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -31,6 +31,10 @@ CLASSPATH = os.path.join(HERE, "target", "perfbench.classpath")
 PINS = os.path.join(HERE, "expected", "pins.tsv")
 WORKLOADS = ["corridor_bundled", "corridor_sparse", "reanalyze_interactive", "index_lifecycle"]
 HEAP = "3g"
+# Spark runs local[n] with n one less than the cores this process may use: the
+# last core is left to the JVM's compiler, collector and driver threads, which
+# otherwise preempt task threads (runs agreed less with a task thread per core)
+CORES = max(1, len(os.sched_getaffinity(0)) - 1)
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170   # one measured run
 LONG_TIMEOUT_S = 1800  # smoke check, pinning
@@ -50,15 +54,12 @@ def fail(msg, code=2):
 
 
 def source_files():
-    """Every file the two builds read."""
-    out = []
-    for base, dirs in ((ROOT, ("src/main", "project")), (HERE, ("src", "project"))):
-        out.append(os.path.join(base, "build.sbt"))
-        for d in dirs:
-            for dirpath, dirnames, files in os.walk(os.path.join(base, d)):
-                dirnames[:] = [x for x in dirnames if x not in ("target", "project")]
-                out += [os.path.join(dirpath, f) for f in files]
-    return sorted(p for p in out if os.path.isfile(p))
+    """Every file the build reads, for the revision hash of a checkout without git."""
+    out = [os.path.join(HERE, "Makefile")]
+    for d in (os.path.join(ROOT, "src", "main"), os.path.join(HERE, "src")):
+        for dirpath, _, files in os.walk(d):
+            out += [os.path.join(dirpath, f) for f in files]
+    return sorted(out)
 
 
 def program_present():
@@ -67,39 +68,27 @@ def program_present():
 
 
 def build():
-    """Build the program and perfbench.Main with sbt unless the build is current."""
+    """Build the program and perfbench.Main (perfbench/Makefile) unless current."""
     os.makedirs(OUT, exist_ok=True)
     with open(os.path.join(OUT, "build.lock"), "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
-        srcs = source_files()
-        if os.path.isfile(CLASSPATH) and all(
-                os.path.getmtime(p) <= os.path.getmtime(CLASSPATH) for p in srcs):
-            return
-        env = dict(os.environ, COURSIER_MODE="offline")
-        tmp = os.path.join(OUT, "sbt-tmp")
-        os.makedirs(tmp, exist_ok=True)
-        opts = ["-Dsbt.offline=true", "-Xmx2g", f"-Djava.io.tmpdir={tmp}"]
-        repos = os.path.expanduser("~/.sbt/repositories")
-        if os.path.isfile(repos):
-            opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
-        env["SBT_OPTS"] = " ".join(opts)
         log_path = os.path.join(OUT, "build.log")
-        with open(log_path, "w") as log:
+        # make runs in a process group of its own, so that on every way out
+        # the compiler it started is stopped with it
+        with open(log_path, "w") as log, subprocess.Popen(
+                ["make", "-C", HERE], stdout=log, stderr=subprocess.STDOUT,
+                stdin=subprocess.DEVNULL, start_new_session=True) as p:
             try:
-                p = subprocess.run(
-                    ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-                     "export perfbench/Runtime/fullClasspath"],
-                    cwd=HERE, env=env, stdout=subprocess.PIPE, stderr=log,
-                    stdin=subprocess.DEVNULL, text=True, timeout=BUILD_TIMEOUT_S)
+                p.wait(timeout=BUILD_TIMEOUT_S)
             except subprocess.TimeoutExpired:
                 fail("build timed out", 3)
-            log.write(p.stdout)
-        cp = [l for l in p.stdout.splitlines() if l.startswith("/") and ".jar" in l]
-        if p.returncode != 0 or not cp:
+            finally:
+                if p.poll() is None:
+                    os.killpg(p.pid, signal.SIGKILL)
+                    p.wait()
+        if p.returncode != 0 or not os.path.isfile(CLASSPATH):
             sys.stderr.write("".join(open(log_path).readlines()[-40:]))
             fail(f"build failed (log: {log_path})", 3)
-        with open(CLASSPATH, "w") as f:
-            f.write(cp[-1].strip())
 
 
 def loadavg():
@@ -138,6 +127,7 @@ def run_jvm(args, tag, timeout=RUN_TIMEOUT_S):
     # the throughput collector: G1's concurrent threads compete with the
     # local executor for the cores and made runs ~20 % slower and noisier
     cmd = (["java", f"-Xmx{HEAP}", "-XX:+UseParallelGC", "-XX:-UsePerfData",
+            f"-XX:ActiveProcessorCount={CORES}",
             f"-Djava.io.tmpdir={work}/tmp",
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [a for p in JDK_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
@@ -158,6 +148,8 @@ def run_jvm(args, tag, timeout=RUN_TIMEOUT_S):
 
 
 def main():
+    # a SIGTERM unwinds like an error, so the build and the JVM are stopped
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=0)
@@ -203,7 +195,8 @@ def main():
         if l.startswith("perfbench.context "):
             context = json.loads(l.split(" ", 1)[1])
     context.update({"loadavg_start": load0, "loadavg_end": loadavg(), "revision": revision(),
-                    "heap": HEAP, "seconds": a.seconds})
+                    "heap": HEAP, "seconds": a.seconds,
+                    "machine_nproc": len(os.sched_getaffinity(0))})
     with open(os.path.join(OUT, "results.jsonl"), "a") as f:
         f.write(json.dumps({"context": context, "result": result,
                             "spans": [l.split(" ", 1)[1] for l in lines
