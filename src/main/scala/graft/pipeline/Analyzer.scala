@@ -24,6 +24,16 @@ import graft.sources.KmlSource
   * bounded (grid cells, pipeline pairs); nothing is collected to the
   * driver except the final summary row. Skewed corridors (many segments
   * in one cell) are split by AQE's skew-join handling.
+  *
+  * Caching contract of [[analyze]]: every table it returns, and every
+  * table more than one of its steps reads, is persisted, so it is
+  * computed once per analysis. `analyze` fills five of them itself: the
+  * parsed KMZ features, pipeline lengths, segments, the sessionized pair
+  * join and the kept sections. Three are persisted but left empty: the
+  * corridor-enriched sections, the overlap rollup and the placemarks.
+  * The first sink that reads one of those fills it, and every later
+  * sink reads the same rows in the same order.
+  * [[AnalysisResult.unpersist]] releases all eight.
   */
 class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializable {
   val p: AnalyzerParams = params.clamped
@@ -245,16 +255,33 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
     * clamps. Ingestion runs the distributed path ([[KmlSource.readMany]]
     * + [[KmlSource.splitMany]]): files parse on executors and arrival-
     * order ids come from per-file windows + offset join — no driver
-    * collect of features. */
+    * collect of features.
+    *
+    * Each input is parsed once: the feature scan is persisted before the
+    * split, and the counts, lengths and segments all read it. The pair
+    * join is persisted once, with its section ids (`sessionized`), and
+    * feeds the pair-group count, sections, effective length, corridors
+    * and overlaps. The returned sections, overlaps and placemarks are
+    * persisted lazily (filled by the first sink). Call
+    * [[AnalysisResult.unpersist]] when the result is no longer needed. */
   def analyze(spark: SparkSession, path: String): AnalysisResult = {
     import spark.implicits._
-    val (pipelines, placemarks) = KmlSource.splitMany(KmlSource.readMany(spark, path))
-    val nPipes = pipelines.count()
-    val nPms = placemarks.count()
-    if (nPipes == 0 && nPms == 0)
-      throw new IllegalArgumentException("No valid features found in the file")
+    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]]()
+    def keep[T <: Dataset[_]](ds: T): T = { cached += ds; ds.persist(StorageLevel.MEMORY_AND_DISK); ds }
 
-    val lengths = pipelineLengths(pipelines).persist(StorageLevel.MEMORY_AND_DISK)
+    val features = keep(KmlSource.readMany(spark, path))
+    val (pipelines, pms) = KmlSource.splitMany(features)
+    val placemarks = keep(pms.toDF())
+    val isLine = col("geometryType") === "LineString"
+    val kinds = features.agg(count(when(isLine, 1)), count(when(!isLine, 1))).first()
+    val nPipes = kinds.getLong(0)
+    val nPms = kinds.getLong(1)
+    if (nPipes == 0 && nPms == 0) {
+      AnalysisResult.release(cached.toSeq)
+      throw new IllegalArgumentException("No valid features found in the file")
+    }
+
+    val lengths = keep(pipelineLengths(pipelines))
     val totals = lengths.agg(
       sum("Shape_Length").as("m"), sum("pipelinelength").as("mi")).first()
     val totalM = if (totals.isNullAt(0)) 0.0 else totals.getDouble(0)
@@ -266,35 +293,36 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
       // the same columns as the ≥2-pipeline path
       val sess0 = sessionize(parallelPairs(spark.emptyDataset[SegmentRow]))
       val (sections0, overlaps0) = enrichOutputs(lengths, sess0, bundledSections(sess0))
-      return AnalysisResult(lengths, placemarks.toDF(), sections0, overlaps0,
+      keep(sections0); keep(overlaps0)
+      return AnalysisResult(lengths, placemarks, sections0, overlaps0,
         AnalysisSummary(nPipes, nPms, totalM, totalMi, 0, 0, 0, 0.0,
-          totalM, totalMi, 0.0, 0.0, 0.0))
+          totalM, totalMi, 0.0, 0.0, 0.0),
+        cached.toSeq)
     }
 
-    val segs = segments(pipelines).persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = parallelPairs(segs).persist(StorageLevel.MEMORY_AND_DISK)
-    val sessionized = sessionize(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-    val sections = bundledSections(sessionized).persist(StorageLevel.MEMORY_AND_DISK)
+    val segs = keep(segments(pipelines))
+    val sessionized = keep(sessionize(parallelPairs(segs)))
+    val sections = keep(bundledSections(sessionized))
 
     val (sectionsOut, overlaps) = enrichOutputs(lengths, sessionized, sections)
+    keep(sectionsOut); keep(overlaps)
 
     val nSegments = segs.count()
-    val nPairGroups = pairs.select("p1", "p2").distinct().count()
-    val nSections = sections.count()
-    val totalBundledM = {
-      val r = sections.agg(sum(col("segment_count") * p.segmentM)).first()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
+    val sectionTotals = sections.agg(count(lit(1)), sum(col("segment_count") * p.segmentM)).first()
+    val nSections = sectionTotals.getLong(0)
+    val totalBundledM = if (sectionTotals.isNullAt(1)) 0.0 else sectionTotals.getDouble(1)
+    val nPairGroups = sessionized.select("p1", "p2").distinct().count()
 
-    val effRaw = effectiveLengthMeters(segs, pairs, lengths)
+    val effRaw = effectiveLengthMeters(segs, sessionized, lengths)
     val effM = math.max(0.0, math.min(totalM, effRaw)) // clamp, reference :876
     val savingsM = math.max(0.0, totalM - effM)
     val savingsPct = if (totalM > 0) savingsM / totalM * 100 else 0.0
 
-    AnalysisResult(lengths, placemarks.toDF(), sectionsOut, overlaps,
+    AnalysisResult(lengths, placemarks, sectionsOut, overlaps,
       AnalysisSummary(nPipes, nPms, totalM, totalMi, nSegments, nPairGroups,
         nSections, totalBundledM, effM, effM / Geodesic.SurveyMile,
-        savingsM, savingsM / Geodesic.SurveyMile, savingsPct))
+        savingsM, savingsM / Geodesic.SurveyMile, savingsPct),
+      cached.toSeq)
   }
 
   /** Re-analysis (reference entry point C, reanalyze :1588-1655): the
@@ -327,13 +355,29 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
 }
 
 /** Full analysis output: the reference's nested result dict (:885-897)
-  * as Datasets + a typed summary. */
+  * as Datasets + a typed summary. `cached` lists every table the
+  * analysis persisted, in the order it persisted them. */
 final case class AnalysisResult(
     pipelines: DataFrame,
     placemarks: DataFrame,
     sections: DataFrame,
     overlaps: DataFrame,
-    summary: AnalysisSummary)
+    summary: AnalysisSummary,
+    cached: Seq[Dataset[_]] = Nil) {
+
+  /** Release every table the analysis cached (features, lengths,
+    * segments, sessionized pairs, sections, enriched sections, overlaps
+    * and placemarks). The frames stay usable; reading one again
+    * recomputes it from the input. */
+  def unpersist(): Unit = AnalysisResult.release(cached)
+}
+
+object AnalysisResult {
+  /** Unpersist most-derived first, so that no remaining cache entry is
+    * re-planned over a table that was just released. */
+  private[pipeline] def release(cached: Seq[Dataset[_]]): Unit =
+    cached.reverseIterator.foreach(_.unpersist())
+}
 
 object Analyzer {
   /** Faithful port of the reference's per-pipeline segmentation loop

@@ -149,7 +149,7 @@ object CorridorGeometry {
     val rectangle = Seq(a, b, c, d, a).map(toLonLat)
 
     // 7. curved strip with miter/bevel joins (:589-712)
-    val curved = curvedStrip(clXY, halfW, widthM, compat).map(_.map(toLonLat))
+    val curved = curvedStrip(clXY.toIndexedSeq, halfW, widthM, compat).map(_.map(toLonLat))
 
     Corridor(rectangle, widthM,
       curved.getOrElse(rectangle), usedFallback = curved.isEmpty)
@@ -172,9 +172,10 @@ object CorridorGeometry {
   }
 
   /** Offset-polyline ring, or None when degenerate/zig-zag (fallback to
-    * the rectangle, reference :695-711). */
+    * the rectangle, reference :695-711). Indexed input: the loops below
+    * address vertices by position, which is linear per lookup on a List. */
   private def curvedStrip(
-      clXY: Seq[XY], halfW: Double, widthM: Double, compat: Boolean): Option[Seq[XY]] = {
+      clXY: IndexedSeq[XY], halfW: Double, widthM: Double, compat: Boolean): Option[Seq[XY]] = {
     if (clXY.length < 2) return None
 
     // per-segment unit directions + left normals, skipping degenerate

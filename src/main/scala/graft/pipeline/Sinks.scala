@@ -192,15 +192,18 @@ object Sinks {
   /** coalesce(1) + rename: deterministic single-file output for small
     * results (the reference's export shape). */
   private def singleFile(df: DataFrame, format: String, targetPath: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_sink_").toString
+    val tmp = Files.createTempDirectory("graft_sink_")
     val dir = s"$tmp/out"
-    df.coalesce(1).write.option("header", "true").format(format).save(dir)
-    val part = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .find(p => p.endsWith(s".$format"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
-    Files.move(Paths.get(part), Paths.get(targetPath), StandardCopyOption.REPLACE_EXISTING)
-    // best-effort temp cleanup
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.deleteIfExists(p); () })
+    try {
+      df.coalesce(1).write.option("header", "true").format(format).save(dir)
+      val part = Files.list(Paths.get(dir)).toArray.map(_.toString)
+        .find(p => p.endsWith(s".$format"))
+        .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
+      Files.move(Paths.get(part), Paths.get(targetPath), StandardCopyOption.REPLACE_EXISTING)
+    } finally {
+      // the temp dir goes whether or not the write succeeded
+      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { Files.deleteIfExists(p); () })
+    }
   }
 }
